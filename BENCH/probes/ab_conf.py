@@ -11,7 +11,8 @@ Usage: python BENCH/probes/ab_conf.py [cores] [rounds]
 Env:   AB_VARIANTS — comma list; each item is one of
        * a codec name ("lz4", "zstd" → spark.io.compression.codec)
        * "KEY=VALUE" — process env var set before the session/plan is
-         built (plan-construction flags, e.g. "SPARK_GRAFT_SLIM_PAGETEXT=0")
+         built (plan-construction flags; README.md lists the ones the
+         package still reads)
        * "conf:spark.key=value" — arbitrary session conf.
 """
 import json

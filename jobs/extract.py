@@ -3,12 +3,17 @@
 
     spark-submit --py-files dist/micro_lab_ocr_spark.zip jobs/extract.py \
         --docs <parquet/iceberg path> --media <parquet path> \
-        --output <dir> --checkpoint <dir> [--buckets 512] [--resume]
+        --output <dir> --checkpoint <dir> [--buckets 512] [--batch-size 8] \
+        [--resume]
 
 Runs the full interleaved extraction with partition-granular checkpoint /
-lineage; a rerun with --resume skips DONE buckets. On a cluster the same file
-is submitted unchanged — master/cores come from spark-submit, and bucket
-count should be sized ≈ corpus_bytes / (executor_mem / 4).
+lineage; a rerun with --resume skips DONE buckets. Buckets run in sequential
+batches of --batch-size (default 8), one Spark plan and one write per batch.
+A larger batch pays the per-plan compile cost less often; a smaller one
+bounds what a crash re-does (resume re-runs the whole unfinished batch) and
+the broadcast span-ref side, which holds one batch's refs. On a cluster the
+same file is submitted unchanged — master/cores come from spark-submit, and
+bucket count should be sized ≈ corpus_bytes / (executor_mem / 4).
 """
 
 from __future__ import annotations
@@ -38,22 +43,20 @@ def main() -> None:
                     choices=["broadcast", "shuffle_refs", "auto"],
                     help="how span refs meet media content (content bytes never "
                          "shuffle or broadcast in any mode): broadcast refs onto "
-                         "the media scan (default; refs bounded per bucket), "
+                         "the media scan (default; refs bounded per batch), "
                          "shuffle the narrow refs to a bucketed media table, or "
                          "auto-pick from a one-time media count")
     ap.add_argument("--media-copartitioned", action="store_true",
                     help="media was written by catalog.write_media_copartitioned "
                          "(bucketed by OWNING doc_id): prune the media scan per "
                          "bucket instead of re-reading the whole table N times")
-    ap.add_argument("--batch-size", type=int, default=1,
-                    help="process buckets in batches of N: one plan + one "
-                         "dynamic-partition-overwrite write per batch "
-                         "(amortizes plan compile; crash re-work grows to "
-                         "batch granularity)")
-    ap.add_argument("--concurrent-buckets", type=int, default=4,
-                    help="pipeline up to N bucket jobs from a driver thread "
-                         "pool (overlaps plan compile with execution); 1 = "
-                         "strictly sequential")
+    ap.add_argument("--batch-size", type=int, default=8,
+                    help="process buckets in sequential batches of N (default "
+                         "8): one plan + one dynamic-partition-overwrite write "
+                         "per batch. Larger N amortizes plan compile; smaller "
+                         "N bounds crash re-work (a resume redoes the whole "
+                         "unfinished batch) and the broadcast refs side (one "
+                         "batch's span refs). 1 = bucket-at-a-time")
     ap.add_argument("--snapshot-id", default="unversioned")
     ap.add_argument("--resume", action="store_true",
                     help="skip buckets already DONE in the checkpoint table")
@@ -74,7 +77,6 @@ def main() -> None:
     ck = CheckpointedExtraction(
         args.checkpoint, args.output, n_buckets=args.buckets,
         media_join=args.media_join, media_copartitioned=args.media_copartitioned,
-        max_concurrent_buckets=args.concurrent_buckets,
         bucket_batch_size=args.batch_size,
     )
     if not args.resume:

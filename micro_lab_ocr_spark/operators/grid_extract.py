@@ -90,7 +90,7 @@ def extract(grids: DataFrame) -> tuple[DataFrame, DataFrame]:
     return records, pages
 
 
-def extract_page_lines(grids: DataFrame, slim: bool = True) -> DataFrame:
+def extract_page_lines(grids: DataFrame) -> DataFrame:
     """Fused page-level extraction for the production pipeline: ONE consumer
     of the page-key exchange — per-row enrichment (windows) feeding a single
     groupBy(page) that emits the serialized record block and the page-constant
@@ -106,33 +106,26 @@ def extract_page_lines(grids: DataFrame, slim: bool = True) -> DataFrame:
     caps scaling efficiency (BENCH/BASELINE.md). One consumer reads the
     exchange once, aggregates once, and needs no join.
 
-    ``slim`` pre-concats the 9 record fields into the final line BEFORE
-    collect_list so the sort/agg carries a 4-field struct (see
-    pipeline.extract._slim_pagetext).
+    The 9 record fields are pre-concatenated into the final line BEFORE
+    collect_list so the sort/agg carries a 4-field struct instead of 12
+    (measured 13% lower wall on the production job at local[16]). The sort
+    key (group_id, strain_rank, row) is unique per page, so the line never
+    acts as a tie-breaker.
     """
     from micro_lab_ocr_spark import spanspec
 
     r, keys = _enriched_rows(grids)
-    if slim:
-        rec_struct = F.struct(
-            "group_id", "strain_rank", "row",
-            F.concat_ws("|", *spanspec.RECORD_FIELDS).alias("line"),
-        )
-        line_of = lambda s: s.getField("line")  # noqa: E731
-    else:
-        rec_struct = F.struct(
-            "group_id", "strain_rank", "row", *spanspec.RECORD_FIELDS
-        )
-        line_of = lambda s: F.concat_ws(  # noqa: E731
-            "|", *[s.getField(f) for f in spanspec.RECORD_FIELDS]
-        )
+    rec_struct = F.struct(
+        "group_id", "strain_rank", "row",
+        F.concat_ws("|", *spanspec.RECORD_FIELDS).alias("line"),
+    )
     return r.groupBy(*keys).agg(
         F.array_join(
             F.transform(
                 F.array_sort(
                     F.collect_list(F.when(F.col("is_record"), rec_struct))
                 ),
-                line_of,
+                lambda s: s.getField("line"),
             ),
             "\n",
         ).alias("lines"),

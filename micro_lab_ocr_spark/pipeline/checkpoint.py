@@ -6,8 +6,9 @@ an interrupted run resumes where it stopped. The engine's scale analogue:
 * the doc keyspace is split into ``n_buckets`` deterministic partitions
   (``pmod(hash(doc_id), n)`` — the same bucketing an Iceberg
   ``bucket(n, doc_id)`` table gives for free);
-* each bucket is processed and written independently and IDEMPOTENTLY
-  (output path keyed by bucket id, overwrite mode);
+* buckets are processed in sequential batches, each batch ONE plan and
+  one write; every bucket's write is IDEMPOTENT (output dir keyed by bucket
+  id, overwrite mode);
 * a checkpoint table records, per bucket: status, input snapshot id, row
   counts and extraction metrics (lineage);
 * a resumed run reads the checkpoint table and skips buckets already DONE.
@@ -23,10 +24,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 def _layout_bucket_count(docs: DataFrame) -> int | None:
@@ -82,34 +84,33 @@ class CheckpointedExtraction:
         n_buckets: int = 16,
         media_join: str = "broadcast",
         media_copartitioned: bool = False,
-        max_concurrent_buckets: int = 4,
-        bucket_batch_size: int = 1,
+        bucket_batch_size: int = 8,
     ):
         self.checkpoint_dir = checkpoint_dir
         self.output_dir = output_dir
         self.n_buckets = n_buckets
-        # per checkpoint bucket the span-ref projection is bounded by the
-        # bucket size, so broadcast is the right default; pass "shuffle_refs"
-        # for very large buckets / bucketed media tables (see
+        # per checkpoint batch the span-ref projection is bounded by the
+        # batch's buckets, so broadcast is the right default; pass
+        # "shuffle_refs" for very large buckets / bucketed media tables (see
         # pipeline.extract.normalize_spans). "auto" would fire a media count
-        # per bucket — counted once here instead if requested.
+        # per batch — counted once here instead if requested.
         self.media_join = media_join
         # Set ONLY when the media table was written co-partitioned with the
         # docs layout (catalog.write_media_copartitioned: media rows bucketed
-        # by their OWNING doc_id). Each bucket run then prunes the media scan
-        # to its own partition directory instead of re-reading the whole
-        # media table once per bucket (N× media IO). Never set it for media
+        # by their OWNING doc_id). Each batch then prunes the media scan to
+        # its buckets' partition directories instead of re-reading the whole
+        # media table once per batch. Never set it for media
         # bucketed on any other key — pruning on a non-owner bucketing would
         # silently degrade matched spans to pass-throughs.
         self.media_copartitioned = media_copartitioned
-        # >1 pipelines bucket jobs from a driver thread pool so per-bucket
-        # plan compile overlaps executor compute (see run()); 1 = strictly
-        # sequential (deterministic bucket order, simplest failure story)
-        self.max_concurrent_buckets = max_concurrent_buckets
-        # >1 processes buckets in batches of this size: ONE plan + ONE
+        # buckets run in sequential batches of this size: ONE plan + ONE
         # dynamic-partition-overwrite write per batch (amortizes the
-        # per-bucket plan-compile fixed cost; see run_batch) at the price of
-        # batch-granular crash re-work instead of bucket-granular
+        # per-bucket plan-compile fixed cost; see run_batch). It also bounds
+        # the crash re-work (a crash redoes the whole unfinished batch) and
+        # the broadcast span-ref side (refs of one batch). A batch of 1 is
+        # bucket-at-a-time.
+        if bucket_batch_size < 1:
+            raise ValueError("bucket_batch_size must be >= 1")
         self.bucket_batch_size = bucket_batch_size
         os.makedirs(checkpoint_dir, exist_ok=True)
 
@@ -147,17 +148,16 @@ class CheckpointedExtraction:
         snapshot_id: str = "unversioned",
         fail_at_bucket: int | None = None,
     ) -> list[BucketLineage]:
-        """Process all not-yet-done buckets; each bucket's write is idempotent
-        (per-bucket output path, overwrite). ``fail_at_bucket`` injects a
-        failure for resume tests."""
+        """Process all not-yet-done buckets in ascending order, in batches of
+        ``bucket_batch_size``; each bucket's write is idempotent (per-bucket
+        output dir, overwrite). ``fail_at_bucket`` injects a failure for
+        resume tests: the buckets before it run, then the run raises."""
         from micro_lab_ocr_spark.pipeline.extract import normalize_spans
         from micro_lab_ocr_spark.sources.catalog import bucket_expr
 
-        done = self.done_buckets()
-        results: list[BucketLineage] = []
         # If the docs table carries the catalog layout's `bucket` partition
         # column (sources/catalog.write_docs), filtering on it gives
-        # PARTITION PRUNING — each bucket's run scans only its directory
+        # PARTITION PRUNING — each batch scans only its buckets' directories
         # (Iceberg bucket(N, doc_id) metadata pruning on a real cluster).
         # The layout's bucket count may DIFFER from this checkpoint's
         # n_buckets (write_docs defaults to 64, jobs default to 16):
@@ -168,7 +168,7 @@ class CheckpointedExtraction:
         # layout bucket onto exactly one checkpoint bucket (h mod KN mod N =
         # h mod N) and the filter STAYS a partition-prunable expression of
         # the partition column; otherwise fall back to re-hashing doc_id
-        # (full scan per bucket, but correct).
+        # (full scan per batch, but correct).
         pruned = "bucket" in docs.columns
         layout_n = _layout_bucket_count(docs) if pruned else None
         if pruned and layout_n == self.n_buckets:
@@ -196,7 +196,7 @@ class CheckpointedExtraction:
         if media is not None and "bucket" in media.columns and media_bucket_col is None:
             media = media.drop("bucket")
         # probe the media side ONCE — normalize_spans would otherwise fire a
-        # driver-side isEmpty() action per bucket (16+ eager scans per job);
+        # driver-side isEmpty() action per batch (one eager scan each);
         # under media_join="auto" the same single pass supplies the count.
         media_join, media_count = self.media_join, None
         if media_join == "auto":
@@ -204,60 +204,20 @@ class CheckpointedExtraction:
             media_present = media_count > 0
         else:
             media_present = media is not None and not media.isEmpty()
-        def run_bucket(bucket: int) -> BucketLineage:
-            t0 = time.perf_counter()
-            bucket_docs = docs.where(bucket_col == bucket)
-            if pruned:
-                bucket_docs = bucket_docs.drop("bucket")
-            bucket_media = media
-            if media_bucket_col is not None:
-                bucket_media = media.where(media_bucket_col == bucket).drop("bucket")
-            out = normalize_spans(
-                bucket_docs, bucket_media, media_present=media_present,
-                media_join=media_join, media_count=media_count,
-            )
-            # lineage metrics ride the WRITE itself (Observation), exactly
-            # like the batched path — the previous shape re-read the bucket
-            # it had just written, one extra full decompress pass per bucket
-            # on the batch_size=1 path
-            from pyspark.sql import Observation
-
-            obs = Observation(f"bucket_stats_single_{bucket}_{snapshot_id}")
-            out = out.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.size("spans")).alias("n_spans"),
-            )
-            path = os.path.join(self.output_dir, f"bucket={bucket}")
-            out.write.mode("overwrite").parquet(path)
-            stats = obs.get
-            row = BucketLineage(
-                bucket=bucket,
-                status="DONE",
-                snapshot_id=snapshot_id,
-                n_docs=int(stats["n_docs"] or 0),
-                n_spans=int(stats["n_spans"] or 0),
-                wall_sec=round(time.perf_counter() - t0, 3),
-                finished_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            )
-            # the checkpoint row lands only AFTER the data write completed —
-            # unchanged under concurrency, so resume semantics hold
-            with open(self._ckpt_path(bucket), "w") as f:
-                json.dump(asdict(row), f)
-            return row
 
         def run_batch(batch: list[int]) -> list[BucketLineage]:
             """ONE Spark plan + ONE dynamic-partition-overwrite write for a
-            whole batch of buckets. Per-bucket plan compile is driver work
+            batch of buckets (the only write path; a batch of one is
+            bucket-at-a-time). Per-bucket plan compile is driver work
             (seconds for this DAG, serialized on the Python side) — at B
             buckets a bucket-at-a-time loop pays it B times per run, a fixed
             cost that throttles every parallelism level equally. Batching
-            amortizes it to once; dynamic overwrite keeps per-bucket output
-            dirs + idempotency, and per-bucket lineage rows come from one
-            grouped aggregate over the written partitions. Trade-off vs
-            bucket-at-a-time: a crash mid-batch leaves NO checkpoint rows
-            for the batch (resume redoes the whole batch, not just the
-            unfinished bucket) — batch_size bounds that re-work."""
+            amortizes it to once per batch; dynamic overwrite keeps
+            per-bucket output dirs + idempotency, and per-bucket lineage rows
+            come from one observed aggregate on the write. A crash mid-batch
+            leaves NO checkpoint rows for the batch (resume redoes the whole
+            batch, not just the unfinished bucket) — the batch size bounds
+            that re-work."""
             t0 = time.perf_counter()
             batch_docs = docs.where(bucket_col.isin([int(b) for b in batch]))
             if pruned:
@@ -274,8 +234,6 @@ class CheckpointedExtraction:
             # per-bucket lineage metrics ride the WRITE itself (Observation /
             # CollectMetrics) — re-reading the written output for stats would
             # cost a second full decompress pass over every output byte
-            from pyspark.sql import Observation
-
             obs = Observation(f"bucket_stats_{batch[0]}")
             aggs = []
             for b in batch:
@@ -296,15 +254,12 @@ class CheckpointedExtraction:
             # dynamic overwrite only replaces partitions that RECEIVE rows: a
             # batch bucket producing zero output would leave a previous run's
             # stale bucket=N files on disk while its checkpoint row records
-            # DONE with n_docs=0 (run_bucket's per-dir overwrite clears even
-            # empty buckets — keep the two modes equivalent)
-            import shutil as _shutil
-
+            # DONE with n_docs=0 — clear them so an emptied bucket reads empty
             for b in batch:
                 if int(m.get(f"docs_{b}") or 0) == 0:
                     stale = os.path.join(self.output_dir, f"bucket={b}")
                     if os.path.exists(stale):
-                        _shutil.rmtree(stale)
+                        shutil.rmtree(stale)
             rows = []
             for b in batch:
                 row = BucketLineage(
@@ -321,48 +276,19 @@ class CheckpointedExtraction:
                 rows.append(row)
             return rows
 
-        todo = []
-        for bucket in range(self.n_buckets):
-            if bucket in done:
-                continue
-            if fail_at_bucket is not None and bucket == fail_at_bucket:
-                # run everything scheduled before the injected failure, then
-                # die — mirrors a mid-job crash for resume tests
-                for b in todo:
-                    results.append(run_bucket(b))
-                raise RuntimeError(f"injected failure at bucket {bucket}")
-            todo.append(bucket)
-
-        if self.bucket_batch_size > 1:
-            for i in range(0, len(todo), self.bucket_batch_size):
-                results.extend(run_batch(todo[i : i + self.bucket_batch_size]))
-            return results
-        if self.max_concurrent_buckets <= 1:
-            for b in todo:
-                results.append(run_bucket(b))
-            return results
-        # Pipelined submission: Catalyst analysis/codegen of a bucket's plan
-        # is DRIVER work (~seconds for the grid DAG) that a sequential loop
-        # serializes with executor compute — at N buckets that fixed cost
-        # dominates small-bucket runs and burdens every parallelism level
-        # equally. Submitting buckets from a small thread pool overlaps the
-        # next plan's compile with the current bucket's execution (the JVM
-        # releases the GIL during py4j calls; Spark's scheduler interleaves
-        # the jobs). Each bucket's write+checkpoint stays atomic per bucket,
-        # so failure/resume semantics are unchanged — some buckets may finish
-        # after another fails, which a resume simply skips.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=self.max_concurrent_buckets) as pool:
-            futures = [pool.submit(run_bucket, b) for b in todo]
-            errs = []
-            for fut in futures:
-                try:
-                    results.append(fut.result())
-                except Exception as exc:  # surface after draining the pool
-                    errs.append(exc)
-            if errs:
-                raise errs[0]
+        done = self.done_buckets()
+        todo = [b for b in range(self.n_buckets) if b not in done]
+        failing = fail_at_bucket is not None and fail_at_bucket in todo
+        if failing:
+            # run everything scheduled before the injected failure, in the
+            # same batches, then die — mirrors a mid-job crash for resume tests
+            todo = todo[: todo.index(fail_at_bucket)]
+        results: list[BucketLineage] = []
+        size = self.bucket_batch_size
+        for i in range(0, len(todo), size):
+            results.extend(run_batch(todo[i : i + size]))
+        if failing:
+            raise RuntimeError(f"injected failure at bucket {fail_at_bucket}")
         return results
 
     # -- S11: keyed corrections upsert ---------------------------------------
@@ -389,8 +315,6 @@ class CheckpointedExtraction:
         On Iceberg this whole method is one ``MERGE INTO … WHEN MATCHED
         THEN UPDATE`` keyed on doc_id.
         """
-        import shutil
-
         from micro_lab_ocr_spark.pipeline.extract import normalize_spans
         from micro_lab_ocr_spark.sources.catalog import bucket_expr
 
@@ -428,6 +352,13 @@ class CheckpointedExtraction:
                 merged = kept.unionByName(new_rows)
             else:
                 merged = new_rows
+            # lineage counts ride the write (as in run_batch), not a re-read
+            obs = Observation(f"corrections_{bucket}_{snapshot_id}")
+            merged = merged.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum(F.size("spans")).alias("n_spans"),
+            )
             tmp = path + ".tmp"
             merged.write.mode("overwrite").parquet(tmp)
             if os.path.exists(bak):
@@ -437,15 +368,13 @@ class CheckpointedExtraction:
             os.rename(tmp, path)
             if os.path.exists(bak):
                 shutil.rmtree(bak)
-            written = spark.read.parquet(path)
-            n_docs = written.count()
-            n_spans = written.select(F.sum(F.size("spans"))).collect()[0][0] or 0
+            stats = obs.get
             row = BucketLineage(
                 bucket=bucket,
                 status="DONE",
                 snapshot_id=snapshot_id,
-                n_docs=n_docs,
-                n_spans=int(n_spans),
+                n_docs=int(stats["n_docs"] or 0),
+                n_spans=int(stats["n_spans"] or 0),
                 wall_sec=round(time.perf_counter() - t0, 3),
                 finished_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             )

@@ -46,16 +46,6 @@ SPAN_SCHEMA = "doc_id string, offset int, kind string, text string, media_ref st
 OUT_FIELDS = ["doc_id", "offset", "kind", "text", "media_ref"]
 
 
-def _slim_pagetext() -> bool:
-    """page_text payload slimming (read at plan-construction time). Default
-    ON — measured 13% lower wall and tighter variance on the production job
-    at local[16] (A/B probe, BENCH/scaling_samples.jsonl protocol);
-    SPARK_GRAFT_SLIM_PAGETEXT=0 keeps the unslimmed struct for A/B."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_SLIM_PAGETEXT", "1") == "1"
-
-
 def _sort_spans(arr: Column) -> Column:
     """array_sort over span structs by their unique leading ``offset`` key.
 
@@ -458,12 +448,8 @@ def normalize_spans(
     # (records→page_text groupBy ⋈ pages groupBy) read the exchange twice and
     # ran the cells→rows aggregate twice — 654 MB shuffle read vs 338 MB
     # written on the 36k-doc scaling corpus, in the memory-traffic-bound
-    # stage that caps scaling efficiency (BENCH/BASELINE.md). Sort key
-    # (group_id, strain_rank, row) is unique per page; the slim default
-    # pre-concats the 9 record fields into the final "|"-joined line BEFORE
-    # collect_list so the sort/agg carries a 4-field struct instead of 12
-    # (equivalence pinned by test_slim_pagetext_equivalent).
-    paged = grid_extract.extract_page_lines(grids, slim=_slim_pagetext())
+    # stage that caps scaling efficiency (BENCH/BASELINE.md).
+    paged = grid_extract.extract_page_lines(grids)
     # `paged` covers every matched decodable-magic row 1:1 (explode_outer in
     # grid_extract keeps failed/empty pages) and carries span identity plus
     # the ok flag, so the whole image output — table spans AND decode-failure

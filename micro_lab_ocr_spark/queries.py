@@ -51,7 +51,7 @@ def _scan_row_groups(path: str) -> int:
 # costs more than the single-task compute it parallelizes (measured at
 # sf1.0: spreading 6–16 MB corpora LOST 0.1–1.3 s per query); above it a
 # row-group-starved scan strands seconds of map compute on one core and
-# the exchange amortizes. $SPARK_GRAFT_SPREAD_AUTO_BYTES overrides.
+# the exchange amortizes.
 _SPREAD_AUTO_BYTES = 64 * 1024 * 1024
 
 
@@ -80,19 +80,12 @@ def load(
       exchange already redistributes; a pre-exchange cannot parallelize the
       scan task itself), broadcast-destined dims, operators that pin their
       own exchange layout.
-
-    ``$SPARK_GRAFT_NO_SPREAD=1`` disables all spreading (A/B knob).
     """
-    import os as _os
-
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
-    if spread and not _os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        if spread == "auto":
-            floor = int(_os.environ.get(
-                "SPARK_GRAFT_SPREAD_AUTO_BYTES", _SPREAD_AUTO_BYTES))
-            if _path_bytes(path) < floor:
-                return df
+    if spread:
+        if spread == "auto" and _path_bytes(path) < _SPREAD_AUTO_BYTES:
+            return df
         slots = spark.sparkContext.defaultParallelism
         if _scan_row_groups(path) < slots:
             df = df.repartition(slots)

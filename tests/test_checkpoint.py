@@ -1,6 +1,8 @@
-"""Checkpoint/lineage/resume + skew salting tests (SURVEY §4.2)."""
+"""Checkpoint/lineage/resume + salted reassembly tests (SURVEY §4.2)."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -60,6 +62,16 @@ def test_checkpoint_resume(spark, small_corpus, tmp_path):
         assert got[d["doc_id"]] == ox.normalize_document(d["doc_id"], d["spans"], media_map)
 
 
+def test_batch_size_must_be_positive(tmp_path):
+    """--batch-size comes from the job's command line; a non-positive size
+    would otherwise make run() crash or silently skip every bucket."""
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="bucket_batch_size"):
+            CheckpointedExtraction(
+                str(tmp_path / "ck"), str(tmp_path / "out"), bucket_batch_size=bad
+            )
+
+
 def test_checkpoint_over_bucketed_catalog_layout(spark, small_corpus, tmp_path):
     """catalog.write_docs layout → checkpoint filters on the partition column
     (scan pruning, not a full-corpus hash filter per bucket) and the resumed
@@ -86,21 +98,6 @@ def test_checkpoint_over_bucketed_catalog_layout(spark, small_corpus, tmp_path):
     assert set(got) == {d["doc_id"] for d in docs}
     for d in docs:
         assert got[d["doc_id"]] == ox.normalize_document(d["doc_id"], d["spans"], media_map)
-
-
-def test_salting_marks_heavy_docs(spark):
-    from micro_lab_ocr_spark.operators.salting import salt_spans
-
-    rows = [("heavy", i) for i in range(50)] + [("light", i) for i in range(3)]
-    df = spark.createDataFrame(rows, "doc_id string, offset int")
-    salted = salt_spans(df, heavy_threshold=10, salt_buckets=4)
-    out = salted.groupBy("doc_id").agg(F.countDistinct("salt").alias("n_salts")).collect()
-    by_doc = {r["doc_id"]: r["n_salts"] for r in out}
-    assert by_doc["heavy"] == 4      # spread over all salt buckets
-    assert by_doc["light"] == 1      # untouched
-    # reassembly-by-offset invariant: salts never permute content order
-    heavy = salted.where(F.col("doc_id") == "heavy").orderBy("offset").collect()
-    assert [r["offset"] for r in heavy] == list(range(50))
 
 
 def test_salted_reassembly_matches_oracle(spark, small_corpus):
@@ -194,6 +191,14 @@ def test_corrections_upsert_keyed_replace(spark, small_corpus, tmp_path):
     )
     results = ck.apply_corrections(spark, corr_df, media_df, snapshot_id="fix1")
     assert 1 <= len(results) <= 2   # only affected buckets rewritten
+    # lineage counts are observed on the write; they must equal a re-read
+    lineage = {row["bucket"]: row for row in ck.lineage()}
+    for r in results:
+        written = spark.read.parquet(os.path.join(out_path, f"bucket={r.bucket}"))
+        n_spans = written.select(F.sum(F.size("spans"))).collect()[0][0]
+        assert (r.n_docs, r.n_spans) == (written.count(), n_spans)
+        assert lineage[r.bucket]["n_docs"] == r.n_docs
+        assert lineage[r.bucket]["n_spans"] == r.n_spans
 
     after = {r["doc_id"]: [s.asDict() for s in r["spans"]]
              for r in spark.read.parquet(out_path).collect()}
@@ -218,8 +223,6 @@ def test_corrections_upsert_keyed_replace(spark, small_corpus, tmp_path):
     # path absent with the complete old bucket in .old — a re-run must
     # restore it before merging, not fall into the new-rows-only branch and
     # drop every non-corrected doc in the bucket
-    import os
-
     affected = [row.bucket for row in results]
     crash_bucket = affected[0]
     bpath = os.path.join(out_path, f"bucket={crash_bucket}")
@@ -233,9 +236,8 @@ def test_corrections_upsert_keyed_replace(spark, small_corpus, tmp_path):
 
 def test_batch_zero_output_bucket_clears_stale_files(spark, small_corpus, tmp_path):
     """Dynamic partition overwrite only replaces partitions that receive
-    rows — a batched run whose input no longer populates a bucket must still
-    clear that bucket's previous files (parity with run_bucket's per-dir
-    overwrite), or readers see deleted docs resurrected."""
+    rows — a run whose input no longer populates a bucket must still clear
+    that bucket's previous files, or readers see deleted docs resurrected."""
     from pyspark.sql import functions as F
 
     from micro_lab_ocr_spark.sources.catalog import bucket_expr
@@ -246,8 +248,6 @@ def test_batch_zero_output_bucket_clears_stale_files(spark, small_corpus, tmp_pa
         str(tmp_path / "ck_z1"), out, n_buckets=4, bucket_batch_size=4
     )
     ck1.run(spark, docs_df, media_df, snapshot_id="full")
-    import os
-
     b = docs_df.select(bucket_expr("doc_id", 4).alias("b")).collect()[0]["b"]
     assert os.path.exists(os.path.join(out, f"bucket={b}"))
     # second run (fresh checkpoint dir, same output): bucket b now empty
@@ -334,9 +334,7 @@ def test_batched_checkpoint_matches_oracle_and_resumes(spark, small_corpus, tmp_
     assert again == []
     # partial resume: drop one bucket's checkpoint row -> only that bucket
     # (one single-bucket batch) reruns, and the output still matches
-    import os as _os
-
-    _os.remove(ck._ckpt_path(2))
+    os.remove(ck._ckpt_path(2))
     redo = ck.run(spark, docs_df, media_df, snapshot_id="batch2")
     assert [r.bucket for r in redo] == [2]
     _oracle_check(spark, str(tmp_path / "out_b"), docs, media)

@@ -1,88 +1,7 @@
-"""Declarative FIFO fallback (operators/fallback.py) vs the oracle's
-sequential FallbackState, on the adds-precede-pops regime the reference's
-pages exhibit (SURVEY §4.3)."""
+"""W3 FIFO fallback pops: the Upstage kernel's ``get_fallback_data`` vs the
+oracle's sequential FallbackState (SURVEY §4.3)."""
 
 from __future__ import annotations
-
-import random
-
-import pytest
-
-from micro_lab_ocr_spark.operators.fallback import apply_fallback
-from micro_lab_ocr_spark.oracle.extract import FallbackState
-
-
-def _gen_page(rng: random.Random):
-    """Random page: bulk rows enqueue 0-3 surplus pairs; strain rows may be
-    E.coli. Returns rows [(row_idx, is_ecoli, pairs)]."""
-    rows = []
-    for r in range(rng.randint(4, 14)):
-        if rng.random() < 0.3:
-            pairs = [(f"T{r}{i}", f"P{r}{i}") for i in range(rng.randint(0, 3))]
-            rows.append((r, False, pairs))
-        else:
-            rows.append((r, rng.random() < 0.4, []))
-    return rows
-
-
-def _oracle_pops(rows):
-    state = FallbackState()
-    out = {}
-    for r, is_ecoli, pairs in rows:
-        state.pairs.extend(pairs)
-        if is_ecoli:
-            state.ecoli_count += 1
-            if state.ecoli_count > 1 and state.pairs:
-                out[r] = state.pop_front()
-    return out
-
-
-def _conforms(rows) -> bool:
-    """True when every eligible pop finds a non-empty queue — the
-    adds-precede-pops regime the declarative operator covers (every observed
-    reference page; the grouped-kernel path covers the rest)."""
-    state = FallbackState()
-    for r, is_ecoli, pairs in rows:
-        state.pairs.extend(pairs)
-        if is_ecoli:
-            state.ecoli_count += 1
-            if state.ecoli_count > 1:
-                if not state.pairs:
-                    return False
-                state.pop_front()
-    return True
-
-
-def test_fallback_matches_oracle(spark):
-    rng = random.Random(99)
-    pages = {}
-    while len(pages) < 40:
-        page = _gen_page(rng)
-        if _conforms(page):
-            pages[f"p{len(pages)}"] = page
-    data = [
-        ("d", page_id, r, is_ecoli, [{"test": t, "presc": p} for t, p in pairs])
-        for page_id, rows in pages.items()
-        for r, is_ecoli, pairs in rows
-    ]
-    df = spark.createDataFrame(
-        data,
-        "doc_id string, page_no string, row_idx int, is_ecoli boolean, "
-        "pairs array<struct<test:string, presc:string>>",
-    )
-    got = {
-        (r["page_no"], r["row_idx"]): (r["fallback_test"], r["fallback_presc"])
-        for r in apply_fallback(df).collect()
-        if r["fallback_test"] is not None
-    }
-    expected = {}
-    for page_id, rows in pages.items():
-        for r, pair in _oracle_pops(rows).items():
-            expected[(page_id, r)] = pair
-    assert got == expected, (
-        f"only_engine={sorted(set(got) - set(expected))[:4]} "
-        f"only_oracle={sorted(set(expected) - set(got))[:4]}"
-    )
 
 
 def test_w3_pop_variants_parity():

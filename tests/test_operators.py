@@ -1,12 +1,12 @@
 """Operator-level tests: dedup recall on planted near-dups, SimHash pairing,
-enrichment join semantics, ANN recall of the LSH path vs brute force."""
+ANN recall of the LSH path vs brute force."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from micro_lab_ocr_spark.operators import ann, dedup, enrich
+from micro_lab_ocr_spark.operators import ann, dedup
 
 
 @pytest.fixture(scope="module")
@@ -155,22 +155,6 @@ def test_minhash_oversize_bucket_guard(spark):
     pairs = dedup.minhash_lsh_pairs(df, max_bucket=10, stats=stats)
     assert pairs.count() == 0
     assert stats["oversize_buckets"] == 4  # all 4 bands degenerate
-
-
-def test_enrich_join_fills_empty(spark):
-    records = spark.createDataFrame(
-        [("GB1-A", "25E15I14"), ("NOPE-X", "25E15I15")],
-        "prescription_number string, test_number string",
-    )
-    progress = spark.createDataFrame(
-        [("GB1-A", "크림", "O/W", "1팀", "글리세린 5%")],
-        "prescription_number string, product_name string, formulation string, "
-        "team string, preservative_info string",
-    )
-    out = {r["prescription_number"]: r for r in enrich.enrich_records(records, progress).collect()}
-    assert out["GB1-A"]["product_name"] == "크림"
-    assert out["NOPE-X"]["product_name"] == ""      # miss → '' not null
-    assert out["NOPE-X"]["preservative_info"] == ""
 
 
 def test_ann_lsh_recall_vs_brute(spark):

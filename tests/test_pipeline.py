@@ -97,11 +97,11 @@ def test_pipeline_independent_of_oracle():
     import re
 
     from micro_lab_ocr_spark.kernels import upstage
-    from micro_lab_ocr_spark.operators import drm, fallback, grid_extract, salting
+    from micro_lab_ocr_spark.operators import drm, grid_extract
     from micro_lab_ocr_spark.pipeline import checkpoint
 
     imp = re.compile(r"^\s*(from|import)\s+\S*oracle", re.MULTILINE)
-    for mod in (px, upstage, grid_extract, fallback, salting, drm, checkpoint):
+    for mod in (px, upstage, grid_extract, drm, checkpoint):
         assert not imp.search(inspect.getsource(mod)), mod.__name__
 
 
@@ -334,27 +334,6 @@ def test_jpeg_image_spans_decode_end_to_end(spark):
     assert got["j"][0]["text"] == got["j"][1]["text"]          # == MLIMG result
     assert got["j"][2] == {"kind": "image", "text": "orig-text",
                            "media_ref": "m://j/2", "offset": 2}
-
-
-def test_slim_pagetext_equivalent(spark, corpus, engine_result, monkeypatch):
-    """The default pre-concats record fields before the page_text
-    collect_list (slimming the sort/agg payload — the scaling protocol's
-    binding stage). The unslimmed mode (SPARK_GRAFT_SLIM_PAGETEXT=0) must be
-    byte-identical: the sort key (group_id, strain_rank, row) is unique per
-    page, so the record fields in the struct tail never act as tie-breakers."""
-    monkeypatch.setenv("SPARK_GRAFT_SLIM_PAGETEXT", "0")
-    docs, media, _ = corpus
-    docs_df = spark.createDataFrame(
-        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
-         for d in docs],
-        DOCS_SCHEMA,
-    )
-    media_df = spark.createDataFrame(
-        [(m["media_ref"], bytearray(m["content"])) for m in media], MEDIA_SCHEMA
-    )
-    slim = {r["doc_id"]: [s.asDict() for s in r["spans"]]
-            for r in px.normalize_spans(docs_df, media_df).collect()}
-    assert slim == engine_result
 
 
 def test_salted_reassembly_equivalent(spark, corpus, engine_result):
