@@ -236,7 +236,7 @@ def fix_7day_ambiguous(cleaned: Column, original: Column) -> Column:
 def clean_cfu_value(col: Column, day: str) -> Column:
     # per-stage let-bindings keep the plan linear (see `let`). NB: the let()
     # HOF barrier evaluates interpreted — on hot paths prefer the staged
-    # DataFrame-level :func:`clean_cfu_staged`, which gets whole-stage
+    # DataFrame-level :func:`clean_cfu_stages`, which gets whole-stage
     # codegen AND shares the chain prefix across day-columns.
     v = let(col, lambda c: remove_noise(split_merged_cells(c)))
     if day == "0":
@@ -248,10 +248,12 @@ def clean_cfu_value(col: Column, day: str) -> Column:
     return F.when(col.isNull() | (col == ""), F.lit("")).otherwise(out)
 
 
-def clean_cfu_staged(df, sources: dict, outputs: list):
-    """DataFrame-level F4→F5→F6(→F7→F11) clean chain as STAGED projections —
-    semantically identical to :func:`clean_cfu_value` per output column, but
-    each bank runs once per source in its own projection stage.
+def clean_cfu_stages(sources: dict, outputs: list) -> list:
+    """F4→F5→F6(→F7→F11) clean chain as STAGED projections — semantically
+    identical to :func:`clean_cfu_value` per output column, but each bank
+    runs once per source in its own projection stage. Returns a step list
+    for :func:`~micro_lab_ocr_spark.functions.cached.apply_steps` (pure in
+    its arguments, so callers may build it once per JVM).
 
     ``sources`` maps a short name to the raw Column; ``outputs`` is a list of
     ``(source_name, day, alias)``. Why stages instead of one nested Column
@@ -263,17 +265,18 @@ def clean_cfu_staged(df, sources: dict, outputs: list):
     recomputing it per column. CollapseProject keeps the stages separate
     because each stage's expression is non-trivial and multiply-referenced.
     Measured on the f6_f7 bank query at sf0.1: 5.4 s → 3.2 s. Temp columns
-    are dropped; the returned frame adds exactly the ``alias`` columns."""
-    df = df.withColumns({f"_ccv_{n}": c for n, c in sources.items()})
-    df = df.withColumns(
+    are dropped by the last step; applied, the steps add exactly the
+    ``alias`` columns."""
+    steps = [
+        {f"_ccv_{n}": c for n, c in sources.items()},
         {
             f"_ccv_{n}_v": remove_noise(split_merged_cells(F.col(f"_ccv_{n}")))
             for n in sources
-        }
-    )
-    lt10_srcs = {n for n, day, _ in outputs if day != "0"}
+        },
+    ]
+    lt10_srcs = dict.fromkeys(n for n, day, _ in outputs if day != "0")
     if lt10_srcs:
-        df = df.withColumns(
+        steps.append(
             {f"_ccv_{n}_v3": fix_less_than_10(F.col(f"_ccv_{n}_v")) for n in lt10_srcs}
         )
     norm = {}
@@ -282,7 +285,7 @@ def clean_cfu_staged(df, sources: dict, outputs: list):
             norm[f"_ccv_{n}_n0"] = normalize_scientific(F.col(f"_ccv_{n}_v"))
         else:
             norm[f"_ccv_{n}_n3"] = normalize_scientific(F.col(f"_ccv_{n}_v3"))
-    df = df.withColumns(norm)
+    steps.append(norm)
     outs = {}
     for n, day, alias in outputs:
         src = F.col(f"_ccv_{n}")
@@ -293,8 +296,9 @@ def clean_cfu_staged(df, sources: dict, outputs: list):
         else:
             out = F.col(f"_ccv_{n}_n3")
         outs[alias] = F.when(src.isNull() | (src == ""), F.lit("")).otherwise(out)
-    df = df.withColumns(outs)
-    return df.drop(*[c for c in df.columns if c.startswith("_ccv_")])
+    steps.append(outs)
+    steps.append(tuple(c for step in steps for c in step if c.startswith("_ccv_")))
+    return steps
 
 
 # ---------------------------------------------------------------------------
@@ -401,7 +405,7 @@ def extract_ids_staged(df, src: Column, test_alias: str, presc_alias: str):
     runs ONCE as a materialized attribute shared by both extraction banks,
     and the banks reference plain attributes so they run in whole-stage
     codegen instead of the let() HOF barrier's interpreted eval (same move
-    as :func:`clean_cfu_staged`; measured 22.1 s → interpreted-free on the
+    as :func:`clean_cfu_stages`; measured 22.1 s → interpreted-free on the
     f3 bench query). Adds exactly ``test_alias``/``presc_alias``."""
     df = df.withColumn("_eis_src", src)
     df = df.withColumn("_eis_pre", preprocess_bulk_name(F.col("_eis_src")))

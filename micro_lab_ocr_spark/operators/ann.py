@@ -87,13 +87,18 @@ def _cosine_np_closure(pairs: DataFrame, qids, qmat) -> DataFrame:
     return pairs.mapInPandas(score, "query_id long, corpus_id long, cosine double")
 
 
-def _collect_query_matrix(queries: DataFrame, id_col: str, vec_col: str):
-    """(sorted ids, float64 matrix) of the bounded query side."""
+def _collect_query_matrix(
+    queries: DataFrame, id_col: str, vec_col: str, limit: int | None = None
+):
+    """(sorted ids, float64 matrix) of the bounded query side, at most
+    ``limit`` rows. An empty side is a (0, 0) matrix, not numpy's 1-D
+    ``(0,)``, so the kernels' row-wise einsums stay well-formed."""
     import numpy as np
 
-    rows = queries.select(
+    q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qvec")
-    ).collect()
+    )
+    rows = (q if limit is None else q.limit(limit)).collect()
     rows.sort(key=lambda r: r["query_id"])
     ids = np.array([r["query_id"] for r in rows], dtype=np.int64)
     mat = (
@@ -126,18 +131,11 @@ def brute_force_topk(
     the pair-join shape rather than materializing an unbounded matrix."""
     import numpy as np
 
-    q_rows = (
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qvec")
-        )
-        .limit(max_closure_queries + 1)
-        .collect()
+    qids, qmat = _collect_query_matrix(
+        queries, id_col, vec_col, limit=max_closure_queries + 1
     )
-    if len(q_rows) > max_closure_queries:
+    if len(qids) > max_closure_queries:
         return _brute_force_topk_pairs(corpus, queries, k, id_col, vec_col)
-    q_rows.sort(key=lambda r: r["query_id"])
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    qmat = np.array([r["qvec"] for r in q_rows], dtype=np.float64)
     # STORED width on the wire: the kernel's astype(float64) of a float32
     # value is exact, so rounding is identical at half the Arrow bytes
     c = corpus.select(F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec"))

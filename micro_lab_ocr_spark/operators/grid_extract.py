@@ -17,10 +17,13 @@ below reuses the partitioning (verified via ``.explain``: single Exchange).
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from micro_lab_ocr_spark.functions import cleaners as C
+from micro_lab_ocr_spark.functions.cached import apply_steps, per_jvm
 
 _HEADER_KEYWORDS = ["CHALLENGED ORGANISM", "BULK NAME", "SPECIFICATION"]
 _STRAIN_KEYWORDS = [
@@ -39,11 +42,6 @@ def _contains_any(col: Column, keywords: list[str]) -> Column:
     for k in keywords:
         out = out | col.contains(k)
     return out
-
-
-def extract_grid_records(grids: DataFrame) -> DataFrame:
-    """Records only — see :func:`extract`."""
-    return extract(grids)[0]
 
 
 def extract(grids: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -68,7 +66,8 @@ def extract(grids: DataFrame) -> tuple[DataFrame, DataFrame]:
     fully fused single-aggregate form.
     """
     r, keys = _enriched_rows(grids)
-    records = r.where(F.col("is_record")).select(
+    x = _exprs()
+    records = r.where(x.is_record).select(
         *PAGE,
         "row",
         "test_number",
@@ -83,10 +82,7 @@ def extract(grids: DataFrame) -> tuple[DataFrame, DataFrame]:
         "group_id",
         "strain_rank",
     )
-    pages = r.groupBy(*keys).agg(
-        F.first("date_info").alias("date_info"),
-        F.first("header_row").alias("header_row"),
-    )
+    pages = r.groupBy(*keys).agg(*x.page_meta)
     return records, pages
 
 
@@ -112,26 +108,9 @@ def extract_page_lines(grids: DataFrame) -> DataFrame:
     key (group_id, strain_rank, row) is unique per page, so the line never
     acts as a tie-breaker.
     """
-    from micro_lab_ocr_spark import spanspec
-
     r, keys = _enriched_rows(grids)
-    rec_struct = F.struct(
-        "group_id", "strain_rank", "row",
-        F.concat_ws("|", *spanspec.RECORD_FIELDS).alias("line"),
-    )
-    return r.groupBy(*keys).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.when(F.col("is_record"), rec_struct))
-                ),
-                lambda s: s.getField("line"),
-            ),
-            "\n",
-        ).alias("lines"),
-        F.first("date_info").alias("date_info"),
-        F.first("header_row").alias("header_row"),
-    )
+    x = _exprs()
+    return r.groupBy(*keys).agg(x.lines, *x.page_meta)
 
 
 def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
@@ -139,7 +118,38 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
     column classification / spec vote / fill-down / clean chain / A2 grouping,
     ALL as window functions over the single page-key partitioning — no
     filtering, so page-level consumers (pages metadata, fused page lines) see
-    every page including empty/failed ones.
+    every page including empty/failed ones. Only the DataFrame wiring runs
+    per call; the expressions come from the per-JVM :func:`_exprs`, and the
+    conf-derived partition count is read here, per plan.
+    """
+    n_part = int(grids.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    passthrough = [c for c in ("media_ref", "span_text", "ok") if c in grids.columns]
+    keys = [*PAGE, *passthrough]
+    x = _exprs()
+    cells = (
+        # explicit page-key not-null filter BELOW the exchange: consumers
+        # infer different IsNotNull constraints, which would canonicalize
+        # re-used copies of this exchange differently — the explicit superset
+        # filter subsumes the inferences, keeping one exchange
+        grids.where(x.page_not_null)
+        .repartition(n_part, *PAGE)
+        .select(*keys, x.cell)
+        .select(*keys, *x.cell_fields)
+    )
+    rows = (
+        cells.withColumns(x.date_parts)
+        .groupBy(*keys, "row")
+        .agg(*x.row_aggs)
+        .withColumns(x.row_text_u)
+    )
+    return apply_steps(rows, x.row_steps), keys
+
+
+@per_jvm
+def _exprs() -> SimpleNamespace:
+    """Every Column of the grid DAG, built once per JVM (see
+    :mod:`~micro_lab_ocr_spark.functions.cached`): a pure function of column
+    names, ~14k py4j round trips to build.
 
     Row-level predicates become flags instead of filters:
 
@@ -152,23 +162,11 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
       ``last(when(is_record, test_number))`` over ``(unboundedPreceding, -1)``
       — the previous RECORD row's value, identical to ``lag`` over the
       filtered frame.
-    """
-    spark = grids.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    passthrough = [c for c in ("media_ref", "span_text", "ok") if c in grids.columns]
-    keys = [*PAGE, *passthrough]
-    cells = (
-        # explicit page-key not-null filter BELOW the exchange: consumers
-        # infer different IsNotNull constraints, which would canonicalize
-        # re-used copies of this exchange differently — the explicit superset
-        # filter subsumes the inferences, keeping one exchange
-        grids.where(F.col(PAGE[0]).isNotNull() & F.col(PAGE[1]).isNotNull())
-        .repartition(n_part, *PAGE)
-        .select(*keys, F.explode_outer("cells").alias("cell"))
-        .select(*keys, F.col("cell.row").alias("row"), F.col("cell.col").alias("col"),
-                F.col("cell.text").alias("text"))
-    )
+    ``row_steps`` is one ``withColumns`` per dependency level (see
+    :func:`~micro_lab_ocr_spark.functions.cached.apply_steps`).
+    """
+    from micro_lab_ocr_spark import spanspec
 
     # ---- per-row rollup -------------------------------------------------
     fixed = C.fix_date_cell(F.trim(F.col("text")))
@@ -184,32 +182,26 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
     # row of an empty/failed page must not reach map_from_entries (null map
     # key) — collect_list skips the null structs, real cells always have col
     cell_struct = F.when(F.col("col").isNotNull(), F.struct("col", "text"))
-    rows = (
-        cells.withColumn("date_m", date_m)
-        .withColumn("date_d", date_d)
-        .groupBy(*keys, "row")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(cell_struct)), lambda x: x["text"]
-                ),
-                " ",
-            ).alias("row_text"),
-            F.map_from_entries(
-                F.array_sort(F.collect_list(cell_struct))
-            ).alias("row_map"),
-            F.max(
-                (F.regexp_like(F.trim("text"), F.lit(_CFU_VALUE_RE))
-                 | F.trim("text").rlike(r"^\d{4,}$")).cast("int")
-            ).alias("has_cfu"),
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("date_m").isNotNull(),
-                           F.struct("col", "date_m", "date_d"))
-                )
-            ).alias("date_cells"),
-        )
-        .withColumn("row_text_u", F.upper("row_text"))
+    row_aggs = (
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(cell_struct)), lambda x: x["text"]
+            ),
+            " ",
+        ).alias("row_text"),
+        F.map_from_entries(
+            F.array_sort(F.collect_list(cell_struct))
+        ).alias("row_map"),
+        F.max(
+            (F.regexp_like(F.trim("text"), F.lit(_CFU_VALUE_RE))
+             | F.trim("text").rlike(r"^\d{4,}$")).cast("int")
+        ).alias("has_cfu"),
+        F.array_sort(
+            F.collect_list(
+                F.when(F.col("date_m").isNotNull(),
+                       F.struct("col", "date_m", "date_d"))
+            )
+        ).alias("date_cells"),
     )
 
     # ---- page metadata: W8 header detect + F19 dates, as WINDOW aggregates
@@ -259,36 +251,35 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
             F.filter(F.map_entries(m), lambda e: pred(e["value"])), lambda e: e["key"]
         )
 
-    r = (
-        rows.withColumn("hdr1", F.min(F.when(
-            (F.col("row") < 5) & _contains_any(F.col("row_text_u"), _HEADER_KEYWORDS),
-            F.col("row"))).over(wp))
-        .withColumn("cand", F.min(F.when(
-            (F.col("row") < 15) & _contains_any(F.col("row_text_u"), _STRAIN_KEYWORDS),
-            F.struct("row", "has_cfu"))).over(wp))
-        # F19 pass 1: first row (<5) with ≥4 date cells; pass 2: first date cell
-        .withColumn("pass1", F.min(F.when(
-            (F.col("row") < 5) & (F.size("date_cells") >= 4),
-            F.struct("row", "date_cells"))).over(wp))
-        .withColumn("pass2", F.min(F.when(
-            (F.col("row") < 5) & (F.size("date_cells") >= 1),
-            F.struct(
-                "row",
-                F.element_at("date_cells", 1).getField("col").alias("col"),
-                F.element_at("date_cells", 1).getField("date_m").alias("m"),
-                F.element_at("date_cells", 1).getField("date_d").alias("d"),
-            ))).over(wp))
-        .withColumn(
-            "header_row",
-            F.when(F.col("hdr1").isNotNull(), F.col("hdr1")).otherwise(
+    steps: list = [
+        {
+            "hdr1": F.min(F.when(
+                (F.col("row") < 5) & _contains_any(F.col("row_text_u"), _HEADER_KEYWORDS),
+                F.col("row"))).over(wp),
+            "cand": F.min(F.when(
+                (F.col("row") < 15) & _contains_any(F.col("row_text_u"), _STRAIN_KEYWORDS),
+                F.struct("row", "has_cfu"))).over(wp),
+            # F19 pass 1: first row (<5) with ≥4 date cells; pass 2: first date cell
+            "pass1": F.min(F.when(
+                (F.col("row") < 5) & (F.size("date_cells") >= 4),
+                F.struct("row", "date_cells"))).over(wp),
+            "pass2": F.min(F.when(
+                (F.col("row") < 5) & (F.size("date_cells") >= 1),
+                F.struct(
+                    "row",
+                    F.element_at("date_cells", 1).getField("col").alias("col"),
+                    F.element_at("date_cells", 1).getField("date_m").alias("m"),
+                    F.element_at("date_cells", 1).getField("date_d").alias("d"),
+                ))).over(wp),
+        },
+        {
+            "header_row": F.when(F.col("hdr1").isNotNull(), F.col("hdr1")).otherwise(
                 F.when(F.col("cand").isNotNull(),
                        F.when(F.col("cand.has_cfu") == 1, F.lit(-1))
                        .otherwise(F.col("cand.row")))
             ),
-        )
-        .withColumn("header_eff",
-                    F.when(F.col("header_row") == -1, F.lit(0)).otherwise(F.col("header_row")))
-    )
+        },
+    ]
 
     # ---- date_info struct (F17/F19/F21), page-constant ---------------------
     def _zp(i: int) -> Column:
@@ -302,14 +293,18 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
         F.col("pass2").isNotNull() & p2m.between(1, 12) & p2d.between(1, 28)
     )  # mirrors the reference's try/except datetime(2024, m, d) on the
     # fixture-reachable domain (all fixture days ≤ 28)
-    r = r.withColumn(
-        "date_info",
-        F.when(
-            F.col("pass1").isNotNull(),
-            F.struct(_zp(0).alias("date_0"), _zp(1).alias("date_7"),
-                     _zp(2).alias("date_14"), _zp(3).alias("date_28")),
-        ).when(ladder_ok, C.date_ladder(p2m, p2d)),
-    ).drop("pass1", "pass2")
+    steps += [
+        {
+            "header_eff": F.when(F.col("header_row") == -1, F.lit(0))
+            .otherwise(F.col("header_row")),
+            "date_info": F.when(
+                F.col("pass1").isNotNull(),
+                F.struct(_zp(0).alias("date_0"), _zp(1).alias("date_7"),
+                         _zp(2).alias("date_14"), _zp(3).alias("date_28")),
+            ).when(ladder_ok, C.date_ladder(p2m, p2d)),
+        },
+        ("pass1", "pass2"),
+    ]
 
     # ---- header-column classification, ONCE PER PAGE ---------------------
     # The classifiers read only the header row's col→text map, so their
@@ -330,55 +325,51 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
         ).over(wfull)
 
     rm = F.col("row_map")
-    r = (
-        r.withColumn("strain_col", _page_col(F.array_max(_cols_where(rm, _is_strain_cell))))
-        .withColumn("spec_col0", _page_col(F.array_max(_cols_where(rm, _is_spec_cell))))
-        .withColumn("cfu0_k", _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 0))))
-        .withColumn("cfu7_k", _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 7))))
-        .withColumn("cfu14_k", _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 14))))
-        .withColumn("cfu28_k", _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 28))))
-        .withColumn("judg_k", _page_col(F.array_min(
-            _cols_where(rm, lambda v: _is_judg_cell(v) & ~_is_final_cell(v)))))
-        .withColumn("final_k", _page_col(F.array_max(_cols_where(rm, _is_final_cell))))
-    )
+    steps.append({
+        "strain_col": _page_col(F.array_max(_cols_where(rm, _is_strain_cell))),
+        "spec_col0": _page_col(F.array_max(_cols_where(rm, _is_spec_cell))),
+        "cfu0_k": _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 0))),
+        "cfu7_k": _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 7))),
+        "cfu14_k": _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 14))),
+        "cfu28_k": _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 28))),
+        "judg_k": _page_col(F.array_min(
+            _cols_where(rm, lambda v: _is_judg_cell(v) & ~_is_final_cell(v)))),
+        "final_k": _page_col(F.array_max(_cols_where(rm, _is_final_cell))),
+    })
     # A7 — Specification inference by value-pattern vote over the first 5
     # rows (after the header) that HAVE the strain_col+1 column: the rank
     # among qualifying rows is a cumulative count, the vote a page window sum.
     # val1 is projected ONCE before the vote windows — a short string instead
     # of two map lookups riding through their frames.
-    r = r.withColumn("val1", F.try_element_at("row_map", F.col("strain_col") + 1))
     val1 = F.col("val1")
     qual = (
         F.col("strain_col").isNotNull()
         & val1.isNotNull()
         & (F.col("row") > F.col("header_eff"))
     )
-    r = r.withColumn("vote_rn", F.sum(qual.cast("int")).over(wcum))
-    r = r.withColumn("spec_votes", F.sum(
-        F.when(qual & (F.col("vote_rn") <= 5)
-               & F.trim(val1).rlike(_SPEC_VALUE_RE), 1).otherwise(0)
-    ).over(wp))
-    r = (
-        r.withColumn(
-            "spec_col",
-            F.coalesce(
-                F.col("spec_col0"),
-                F.when(F.col("spec_votes") >= 3, F.col("strain_col") + 1),
-                F.lit(-1),
-            ),
-        )
-        .withColumn(
-            "cfu_start",
-            F.when(F.col("spec_col") > F.col("strain_col"), F.col("spec_col") + 1)
-            .otherwise(F.col("strain_col") + 1),
-        )
-        .withColumn("cfu_0_col", F.coalesce("cfu0_k", F.col("cfu_start")))
-        .withColumn("cfu_7_col", F.coalesce("cfu7_k", F.col("cfu_start") + 1))
-        .withColumn("cfu_14_col", F.coalesce("cfu14_k", F.col("cfu_start") + 2))
-        .withColumn("cfu_28_col", F.coalesce("cfu28_k", F.col("cfu_start") + 3))
-        .withColumn("judgment_col", F.coalesce("judg_k", F.col("cfu_start") + 4))
-        .withColumn("final_judgment_col", F.coalesce("final_k", F.col("cfu_start") + 5))
-    )
+    steps += [
+        {"val1": F.try_element_at("row_map", F.col("strain_col") + 1)},
+        {"vote_rn": F.sum(qual.cast("int")).over(wcum)},
+        {"spec_votes": F.sum(
+            F.when(qual & (F.col("vote_rn") <= 5)
+                   & F.trim(val1).rlike(_SPEC_VALUE_RE), 1).otherwise(0)
+        ).over(wp)},
+        {"spec_col": F.coalesce(
+            F.col("spec_col0"),
+            F.when(F.col("spec_votes") >= 3, F.col("strain_col") + 1),
+            F.lit(-1),
+        )},
+        {"cfu_start": F.when(F.col("spec_col") > F.col("strain_col"), F.col("spec_col") + 1)
+         .otherwise(F.col("strain_col") + 1)},
+        {
+            "cfu_0_col": F.coalesce("cfu0_k", F.col("cfu_start")),
+            "cfu_7_col": F.coalesce("cfu7_k", F.col("cfu_start") + 1),
+            "cfu_14_col": F.coalesce("cfu14_k", F.col("cfu_start") + 2),
+            "cfu_28_col": F.coalesce("cfu28_k", F.col("cfu_start") + 3),
+            "judgment_col": F.coalesce("judg_k", F.col("cfu_start") + 4),
+            "final_judgment_col": F.coalesce("final_k", F.col("cfu_start") + 5),
+        },
+    ]
 
     def cell_at(col_key: str) -> Column:
         return F.coalesce(F.try_element_at("row_map", F.col(col_key)), F.lit(""))
@@ -387,17 +378,19 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
     # resolved — so the map (the widest column in the frame) is dropped
     # before the fill-down / lag window passes below and their per-partition
     # buffers carry six short strings instead of the full col→text map.
-    r = (
-        r.withColumn("bulk", F.trim(F.coalesce(F.try_element_at("row_map", F.lit(0)), F.lit(""))))
-        .withColumn("strain_raw", F.trim(cell_at("strain_col")))
-        .withColumn("c0_raw", cell_at("cfu_0_col"))
-        .withColumn("c7_raw", cell_at("cfu_7_col"))
-        .withColumn("c14_raw", cell_at("cfu_14_col"))
-        .withColumn("c28_raw", cell_at("cfu_28_col"))
-        .withColumn("judg_raw", cell_at("judgment_col"))
-        .withColumn("final_raw", cell_at("final_judgment_col"))
-        .drop("row_map")
-    )
+    steps += [
+        {
+            "bulk": F.trim(F.coalesce(F.try_element_at("row_map", F.lit(0)), F.lit(""))),
+            "strain_raw": F.trim(cell_at("strain_col")),
+            "c0_raw": cell_at("cfu_0_col"),
+            "c7_raw": cell_at("cfu_7_col"),
+            "c14_raw": cell_at("cfu_14_col"),
+            "c28_raw": cell_at("cfu_28_col"),
+            "judg_raw": cell_at("judgment_col"),
+            "final_raw": cell_at("final_judgment_col"),
+        },
+        ("row_map",),
+    ]
 
     # ---- data rows: W1 fill-down + clean chain, flag-gated ----------------
     # ``is_data`` replaces the old row filter (below-header + resolvable
@@ -405,48 +398,40 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
     # last(ignorenulls) over the unfiltered frame sees exactly the values the
     # filtered frame used to — non-data rows contribute nothing and merely
     # carry (unused) filled values.
-    is_data = F.coalesce(
-        F.col("header_row").isNotNull()
-        & ((F.col("header_row") == -1) | (F.col("row") > F.col("header_row")))
-        & F.col("strain_col").isNotNull(),
-        F.lit(False),
-    )
-    r = r.withColumn("is_data", is_data)
-
-    w = Window.partitionBy(*PAGE).orderBy("row").rowsBetween(Window.unboundedPreceding, 0)
-    r = (
-        r.withColumn(
-            "t_ext",
-            F.when(F.col("is_data") & (F.col("bulk") != ""), C.extract_test_number(F.col("bulk"))),
-        )
-        .withColumn(
-            "p_ext",
-            F.when(F.col("is_data") & (F.col("bulk") != ""), C.extract_prescription_number(F.col("bulk"))),
-        )
-        .withColumn("test_number", F.coalesce(F.last(F.nullif("t_ext", F.lit("")), True).over(w), F.lit("")))
-        .withColumn(
-            "prescription_number",
-            F.coalesce(F.last(F.nullif("p_ext", F.lit("")), True).over(w), F.lit("")),
-        )
-        .withColumn("strain", F.when(F.col("is_data"), C.normalize_strain(F.col("strain_raw"))))
+    is_data = F.col("is_data")
+    has_bulk = is_data & (F.col("bulk") != "")
+    steps += [
+        {"is_data": F.coalesce(
+            F.col("header_row").isNotNull()
+            & ((F.col("header_row") == -1) | (F.col("row") > F.col("header_row")))
+            & F.col("strain_col").isNotNull(),
+            F.lit(False),
+        )},
+        {
+            "t_ext": F.when(has_bulk, C.extract_test_number(F.col("bulk"))),
+            "p_ext": F.when(has_bulk, C.extract_prescription_number(F.col("bulk"))),
+        },
+        {
+            "test_number": F.coalesce(
+                F.last(F.nullif("t_ext", F.lit("")), True).over(wcum), F.lit("")),
+            "prescription_number": F.coalesce(
+                F.last(F.nullif("p_ext", F.lit("")), True).over(wcum), F.lit("")),
+            "strain": F.when(is_data, C.normalize_strain(F.col("strain_raw"))),
+        },
         # strain cell must exist (reference: col in row) and normalize non-empty
-        .withColumn(
-            "is_record",
-            F.coalesce(
-                F.col("is_data") & (F.col("strain_raw") != "") & (F.col("strain") != ""),
-                F.lit(False),
-            ),
-        )
-    )
+        {"is_record": F.coalesce(
+            is_data & (F.col("strain_raw") != "") & (F.col("strain") != ""),
+            F.lit(False),
+        )},
+    ]
     final_raw = F.col("final_raw")
     rec = F.col("is_record")
-    # staged projections (see cleaners.clean_cfu_staged): the four day-column
+    # staged projections (see cleaners.clean_cfu_stages): the four day-column
     # clean chains run in whole-stage codegen instead of interpreted let()
     # HOF eval — this is the flagship/production path's per-row hot loop.
     # Inputs gated on is_record: when() short-circuits the chains on header /
     # pre-header / strain-less rows, whose outputs nothing consumes.
-    r = C.clean_cfu_staged(
-        r,
+    steps += C.clean_cfu_stages(
         {
             "c0": F.when(rec, F.col("c0_raw")),
             "c7": F.when(rec, F.col("c7_raw")),
@@ -460,15 +445,13 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
             ("c28", "28", "cfu_28day"),
         ],
     )
-    r = r.withColumn(
-        "judgment", F.when(rec, C.extract_judgment(F.col("judg_raw")))
-    ).withColumn(
-        "final_judgment",
-        F.when(
+    steps.append({
+        "judgment": F.when(rec, C.extract_judgment(F.col("judg_raw"))),
+        "final_judgment": F.when(
             rec,
             F.when(final_raw == "", F.lit("")).otherwise(C.extract_judgment(final_raw)),
         ),
-    )
+    })
 
     # ---- A2 — strain-group sort within consecutive test groups ----------
     # lag over the old filtered frame = the previous RECORD row's value here:
@@ -477,16 +460,43 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
         Window.unboundedPreceding, -1
     )
     prev_test = F.last(F.when(rec, F.col("test_number")), True).over(wprev)
-    r = (
-        r.withColumn(
-            "new_group",
-            F.when(
-                rec & (prev_test.isNull() | (prev_test != F.col("test_number"))),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn("group_id", F.sum("new_group").over(wcum))
-        .withColumn("strain_rank", F.when(rec, C.strain_rank(F.col("strain"))))
-        .drop("new_group")
+    steps += [
+        {"new_group": F.when(
+            rec & (prev_test.isNull() | (prev_test != F.col("test_number"))),
+            F.lit(1),
+        ).otherwise(F.lit(0))},
+        {
+            "group_id": F.sum("new_group").over(wcum),
+            "strain_rank": F.when(rec, C.strain_rank(F.col("strain"))),
+        },
+        ("new_group",),
+    ]
+
+    rec_struct = F.struct(
+        "group_id", "strain_rank", "row",
+        F.concat_ws("|", *spanspec.RECORD_FIELDS).alias("line"),
     )
-    return r, keys
+    return SimpleNamespace(
+        page_not_null=F.col(PAGE[0]).isNotNull() & F.col(PAGE[1]).isNotNull(),
+        cell=F.explode_outer("cells").alias("cell"),
+        cell_fields=(F.col("cell.row").alias("row"), F.col("cell.col").alias("col"),
+                     F.col("cell.text").alias("text")),
+        date_parts={"date_m": date_m, "date_d": date_d},
+        row_aggs=row_aggs,
+        row_text_u={"row_text_u": F.upper("row_text")},
+        row_steps=tuple(steps),
+        is_record=rec,
+        page_meta=(
+            F.first("date_info").alias("date_info"),
+            F.first("header_row").alias("header_row"),
+        ),
+        lines=F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.when(rec, rec_struct))
+                ),
+                lambda s: s.getField("line"),
+            ),
+            "\n",
+        ).alias("lines"),
+    )

@@ -73,6 +73,9 @@ class BucketLineage:
     n_docs: int
     n_spans: int
     wall_sec: float
+    # driver wall from batch (or corrections bucket) start until
+    # normalize_spans returned: the per-plan fixed cost, no task runs in it
+    plan_sec: float
     finished_at: str
 
 
@@ -104,8 +107,8 @@ class CheckpointedExtraction:
         # silently degrade matched spans to pass-throughs.
         self.media_copartitioned = media_copartitioned
         # buckets run in sequential batches of this size: ONE plan + ONE
-        # dynamic-partition-overwrite write per batch (amortizes the
-        # per-bucket plan-compile fixed cost; see run_batch). It also bounds
+        # dynamic-partition-overwrite write per batch (pays the plan build
+        # once per batch, not once per bucket; see run_batch). It also bounds
         # the crash re-work (a crash redoes the whole unfinished batch) and
         # the broadcast span-ref side (refs of one batch). A batch of 1 is
         # bucket-at-a-time.
@@ -208,13 +211,13 @@ class CheckpointedExtraction:
         def run_batch(batch: list[int]) -> list[BucketLineage]:
             """ONE Spark plan + ONE dynamic-partition-overwrite write for a
             batch of buckets (the only write path; a batch of one is
-            bucket-at-a-time). Per-bucket plan compile is driver work
-            (seconds for this DAG, serialized on the Python side) — at B
-            buckets a bucket-at-a-time loop pays it B times per run, a fixed
-            cost that throttles every parallelism level equally. Batching
-            amortizes it to once per batch; dynamic overwrite keeps
-            per-bucket output dirs + idempotency, and per-bucket lineage rows
-            come from one observed aggregate on the write. A crash mid-batch
+            bucket-at-a-time). The plan build is driver work during which no
+            task runs, recorded per batch as ``plan_sec``; the expressions
+            are built once per JVM, so a repeat build is only DataFrame
+            wiring and analysis. Batching pays it once per batch instead of
+            once per bucket; dynamic overwrite keeps per-bucket output dirs +
+            idempotency, and per-bucket lineage rows come from one observed
+            aggregate on the write. A crash mid-batch
             leaves NO checkpoint rows for the batch (resume redoes the whole
             batch, not just the unfinished bucket) — the batch size bounds
             that re-work."""
@@ -230,7 +233,9 @@ class CheckpointedExtraction:
             out = normalize_spans(
                 batch_docs, batch_media, media_present=media_present,
                 media_join=media_join, media_count=media_count,
-            ).withColumn("bucket", bucket_expr("doc_id", self.n_buckets))
+            )
+            plan_sec = round(time.perf_counter() - t0, 3)
+            out = out.withColumn("bucket", bucket_expr("doc_id", self.n_buckets))
             # per-bucket lineage metrics ride the WRITE itself (Observation /
             # CollectMetrics) — re-reading the written output for stats would
             # cost a second full decompress pass over every output byte
@@ -269,6 +274,7 @@ class CheckpointedExtraction:
                     n_docs=int(m.get(f"docs_{b}") or 0),
                     n_spans=int(m.get(f"spans_{b}") or 0),
                     wall_sec=wall,  # shared batch wall (documented)
+                    plan_sec=plan_sec,  # shared batch plan build
                     finished_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                 )
                 with open(self._ckpt_path(b), "w") as f:
@@ -344,6 +350,7 @@ class CheckpointedExtraction:
                 bucket_corrected, media,
                 media_present=media_present, media_join=self.media_join,
             )
+            plan_sec = round(time.perf_counter() - t0, 3)
             if os.path.exists(path):
                 old = spark.read.parquet(path)
                 kept = old.join(
@@ -376,6 +383,7 @@ class CheckpointedExtraction:
                 n_docs=int(stats["n_docs"] or 0),
                 n_spans=int(stats["n_spans"] or 0),
                 wall_sec=round(time.perf_counter() - t0, 3),
+                plan_sec=plan_sec,
                 finished_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             )
             with open(self._ckpt_path(bucket), "w") as f:

@@ -34,16 +34,19 @@ pure Catalyst — see operators/grid_extract.py. Arrow batches are capped at
 from __future__ import annotations
 
 from collections.abc import Iterator
+from types import SimpleNamespace
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from micro_lab_ocr_spark import spanspec
+from micro_lab_ocr_spark.functions.cached import per_jvm
 from micro_lab_ocr_spark.operators import drm, grid_extract
 
 SPAN_SCHEMA = "doc_id string, offset int, kind string, text string, media_ref string"
 OUT_FIELDS = ["doc_id", "offset", "kind", "text", "media_ref"]
+KNOWN_KINDS = ("text", "html", "table_html", "image", "pdf")
 
 
 def _sort_spans(arr: Column) -> Column:
@@ -272,6 +275,75 @@ def _with_dates(dates_line: Column, lines: Column) -> Column:
     ).otherwise(F.concat(body, F.lit("\n"), lines))
 
 
+@per_jvm
+def _exprs() -> SimpleNamespace:
+    """Every Column :func:`normalize_spans` wires, built once per JVM (see
+    :mod:`~micro_lab_ocr_spark.functions.cached`). Per call remain only the
+    DataFrame wiring, the kernel UDFs and reads of the session conf."""
+    kind = F.col("kind")
+    ok = F.col("ok")
+    # W2 — cross-page date carry within a doc: carry the last page that
+    # actually parsed a date (`backend.py:256-307`); min-row gate failures
+    # (ok=false) neither carry nor consume (`backend.py:235-238`).
+    w2 = Window.partitionBy("doc_id").orderBy("offset").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    own_date = F.when(
+        F.col("d0").isNotNull(),
+        F.concat_ws(",", "d0", "d7", "d14", "d28"),
+    )
+    span_struct = F.struct("offset", "kind", "text", "media_ref")
+    return SimpleNamespace(
+        span_row=F.explode("spans").alias("s"),
+        span_fields=(
+            F.col("s.offset").alias("offset"),
+            F.col("s.kind").alias("kind"),
+            F.col("s.text").alias("text"),
+            F.col("s.media_ref").alias("media_ref"),
+        ),
+        is_kind={k: kind == k for k in KNOWN_KINDS},
+        is_unknown_kind=~kind.isin(*KNOWN_KINDS),
+        text_out=(F.lit("text").alias("kind"), "text", F.lit("").alias("media_ref")),
+        has_content=F.col("content").isNotNull(),
+        pdf_decodable=drm.is_decodable(F.col("content")),
+        img_decodable=drm.is_decodable_image(F.col("content")),
+        span_text=F.col("text").alias("span_text"),
+        image_out=(
+            F.when(ok, F.lit("table")).otherwise(F.lit("image")).alias("kind"),
+            F.when(
+                ok, _with_dates(_dates_line(F.col("date_info")), F.col("lines")),
+            ).otherwise(F.col("span_text")).alias("text"),
+        ),
+        carried={"carried": F.last(own_date, ignorenulls=True).over(w2)},
+        table_out=(
+            F.lit("table").alias("kind"),
+            F.when(~ok, F.lit("dates=,,,"))
+            .otherwise(
+                _with_dates(F.coalesce(F.col("carried"), F.lit(",,,")), F.col("lines"))
+            )
+            .alias("text"),
+            F.lit("").alias("media_ref"),
+        ),
+        span_struct=span_struct,
+        ordered=_sort_spans(F.collect_list(span_struct)).alias("ordered"),
+        dense_spans=F.transform(
+            F.col("ordered"),
+            lambda s, i: F.struct(
+                s.getField("kind").alias("kind"),
+                s.getField("text").alias("text"),
+                s.getField("media_ref").alias("media_ref"),
+                i.alias("offset"),
+            ),
+        ).alias("spans"),
+        spans_or_empty=F.coalesce(
+            "spans",
+            F.array().cast(
+                "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+            ),
+        ).alias("spans"),
+    )
+
+
 # ---------------------------------------------------------------------------
 # the pipeline
 # ---------------------------------------------------------------------------
@@ -315,30 +387,19 @@ def normalize_spans(
       spans share few media rows would under-estimate the spans-side
       projection — such sharing is outside this engine's data model, where
       each media row is referenced by one span.)"""
-    spans = docs.select(
-        "doc_id",
-        F.explode("spans").alias("s"),
-    ).select(
-        "doc_id",
-        F.col("s.offset").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-    )
+    x = _exprs()
+    spans = docs.select("doc_id", x.span_row).select("doc_id", *x.span_fields)
 
-    text_out = spans.where(F.col("kind") == "text").select(
-        "doc_id", "offset", F.lit("text").alias("kind"), "text", F.lit("").alias("media_ref")
-    )
+    text_out = spans.where(x.is_kind["text"]).select("doc_id", "offset", *x.text_out)
 
     # Unknown span kinds pass through unchanged — never silently dropped
     # (a 10^12-doc run must not lose data on schema drift).
-    known = ["text", "html", "table_html", "image", "pdf"]
-    other_out = spans.where(~F.col("kind").isin(known)).select(
+    other_out = spans.where(x.is_unknown_kind).select(
         "doc_id", "offset", "kind", "text", "media_ref"
     )
 
     html_out = (
-        spans.where(F.col("kind") == "html")
+        spans.where(x.is_kind["html"])
         .select("doc_id", "offset", "kind", "text", "media_ref")
         .mapInPandas(_html_main_content, SPAN_SCHEMA)
     )
@@ -363,8 +424,8 @@ def normalize_spans(
         media_is_empty = media.isEmpty()
 
     span_cols = ["doc_id", "offset", "kind", "text", "media_ref"]
-    pdf_spans = spans.where(F.col("kind") == "pdf").select(*span_cols)
-    image_spans = spans.where(F.col("kind") == "image").select(*span_cols)
+    pdf_spans = spans.where(x.is_kind["pdf"]).select(*span_cols)
+    image_spans = spans.where(x.is_kind["image"]).select(*span_cols)
     if media_is_empty:
         pdf_out = pdf_spans
         image_out = image_spans
@@ -376,7 +437,7 @@ def normalize_spans(
     # A media row with NULL content is a dangling ref: the decode kernels
     # must never see it (bytes(None) would fail the whole job) — the span
     # passes through unchanged via the *_missing arms, never lost.
-    media = media.where(F.col("content").isNotNull())
+    media = media.where(x.has_content)
 
     if media_join == "auto":
         n_media = media_count if media_count is not None else media.count()
@@ -399,10 +460,9 @@ def normalize_spans(
     # exactly like dangling media refs.
     pdf_missing = pdf_spans.join(media_keys, "media_ref", "left_anti")
     pdf_matched = media.join(b(pdf_spans), "media_ref")
-    decodable = drm.is_decodable(F.col("content"))
-    pdf_undecodable = pdf_matched.where(~decodable).select(*span_cols)
+    pdf_undecodable = pdf_matched.where(~x.pdf_decodable).select(*span_cols)
     pdf_out = (
-        pdf_matched.where(decodable)
+        pdf_matched.where(x.pdf_decodable)
         # "text" rides along (tiny for media spans) so the kernel's
         # no-text-layer fallback can pass the span through unchanged
         .select("doc_id", "offset", "media_ref", "text", "content")
@@ -418,21 +478,17 @@ def normalize_spans(
     # magic-valid-but-corrupt payloads come back from the kernel with
     # ok=false and pass through too — a 10^12-doc run must not crash on one
     # undecodable blob.
-    img_decodable = drm.is_decodable_image(F.col("content"))
     image_missing = image_spans.join(media_keys, "media_ref", "left_anti")
     image_undecodable = (
-        media.where(~img_decodable)
+        media.where(~x.img_decodable)
         .select("media_ref")
         .join(b(image_spans), "media_ref")
         .select(*span_cols)
     )
     grids = (
-        media.where(img_decodable)
+        media.where(x.img_decodable)
         .join(b(image_spans.select("doc_id", "offset", "media_ref", "text")), "media_ref")
-        .select(
-            "doc_id", "offset", "media_ref",
-            F.col("text").alias("span_text"), "content",
-        )
+        .select("doc_id", "offset", "media_ref", x.span_text, "content")
         .mapInPandas(
             _ocr_grids,
             "doc_id string, offset int, media_ref string, span_text string, "
@@ -456,16 +512,7 @@ def normalize_spans(
     # pass-throughs — is one CASE over it (no join, no further shuffle)
     image_out = (
         paged
-        .select(
-            "doc_id",
-            "offset",
-            F.when(F.col("ok"), F.lit("table")).otherwise(F.lit("image")).alias("kind"),
-            F.when(
-                F.col("ok"),
-                _with_dates(_dates_line(F.col("date_info")), F.col("lines")),
-            ).otherwise(F.col("span_text")).alias("text"),
-            "media_ref",
-        )
+        .select("doc_id", "offset", *x.image_out, "media_ref")
         .unionByName(image_missing)
         .unionByName(image_undecodable)
     )
@@ -477,14 +524,10 @@ def normalize_spans(
 
 
 def _table_html_branch(spans: DataFrame) -> DataFrame:
-    """Upstage page kernel + W2 date-carry window.
-
-    W2 — cross-page date carry within a doc: carry the last page that
-    actually parsed a date (`backend.py:256-307`); min-row gate failures
-    (ok=false) neither carry nor consume (`backend.py:235-238`).
-    """
+    """Upstage page kernel + W2 date-carry window (see :func:`_exprs`)."""
+    x = _exprs()
     upstage = (
-        spans.where(F.col("kind") == "table_html")
+        spans.where(x.is_kind["table_html"])
         .select("doc_id", "offset", "text")
         .mapInPandas(
             _upstage_pages,
@@ -492,27 +535,7 @@ def _table_html_branch(spans: DataFrame) -> DataFrame:
             "d0 string, d7 string, d14 string, d28 string",
         )
     )
-    w2 = Window.partitionBy("doc_id").orderBy("offset").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    own_date = F.when(
-        F.col("d0").isNotNull(),
-        F.concat_ws(",", "d0", "d7", "d14", "d28"),
-    )
-    return (
-        upstage.withColumn("carried", F.last(own_date, ignorenulls=True).over(w2))
-        .select(
-            "doc_id",
-            "offset",
-            F.lit("table").alias("kind"),
-            F.when(~F.col("ok"), F.lit("dates=,,,"))
-            .otherwise(
-                _with_dates(F.coalesce(F.col("carried"), F.lit(",,,")), F.col("lines"))
-            )
-            .alias("text"),
-            F.lit("").alias("media_ref"),
-        )
-    )
+    return upstage.withColumns(x.carried).select("doc_id", "offset", *x.table_out)
 
 
 def _assemble(
@@ -527,6 +550,7 @@ def _assemble(
     final array_sort on (offset) restores content order, so determinism never
     depends on task order (SURVEY §7.3 risk 4).
     """
+    x = _exprs()
     all_spans = branches[0]
     for b in branches[1:]:
         all_spans = all_spans.unionByName(b)
@@ -534,41 +558,17 @@ def _assemble(
         partial = (
             all_spans.withColumn("salt", F.pmod("offset", F.lit(salt_buckets)))
             .groupBy("doc_id", "salt")
-            .agg(F.collect_list(F.struct("offset", "kind", "text", "media_ref")).alias("part"))
+            .agg(F.collect_list(x.span_struct).alias("part"))
         )
         assembled = (
             partial.groupBy("doc_id")
             .agg(_sort_spans(F.flatten(F.collect_list("part"))).alias("ordered"))
         )
     else:
-        assembled = (
-            all_spans.groupBy("doc_id")
-            .agg(
-                _sort_spans(
-                    F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
-                ).alias("ordered")
-            )
-        )
-    assembled = (
-        assembled
-        .select(
-            "doc_id",
-            F.transform(
-                F.col("ordered"),
-                lambda s, i: F.struct(
-                    s.getField("kind").alias("kind"),
-                    s.getField("text").alias("text"),
-                    s.getField("media_ref").alias("media_ref"),
-                    i.alias("offset"),
-                ),
-            ).alias("spans"),
-        )
-    )
-    empty = F.array().cast(
-        "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    )
+        assembled = all_spans.groupBy("doc_id").agg(x.ordered)
+    assembled = assembled.select("doc_id", x.dense_spans)
     return (
         docs.select("doc_id")
         .join(assembled, "doc_id", "left")
-        .select("doc_id", F.coalesce("spans", empty).alias("spans"))
+        .select("doc_id", x.spans_or_empty)
     )

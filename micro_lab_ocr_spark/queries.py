@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from micro_lab_ocr_spark import banks
 from micro_lab_ocr_spark.functions import cleaners as C
+from micro_lab_ocr_spark.functions.cached import apply_steps
 from micro_lab_ocr_spark.functions import text as T
 from micro_lab_ocr_spark.operators import ann, dedup, sampling
 
@@ -1076,7 +1077,7 @@ def f6_f7_clean_chain(spark, sf_dir):
     keyed off orders (so the driver exercises it at every sf).
 
     DICTIONARY execution: ``raw`` takes exactly ``len(_CFU_RAW)`` (=105)
-    distinct values, so the staged F4→F11 chain (clean_cfu_staged — shared
+    distinct values, so the staged F4→F11 chain (clean_cfu_stages — shared
     prefix computed once, banks in whole-stage codegen) runs ONCE per bank
     entry on a 105-row frame, which then broadcast-joins back onto the fact
     rows by ``key % 105``. Per row the regex banks collapse to one int hash
@@ -1089,10 +1090,12 @@ def f6_f7_clean_chain(spark, sf_dir):
     bank = spark.createDataFrame(
         [(i, v) for i, v in enumerate(_CFU_RAW)], "idx int, raw string"
     )
-    bank = C.clean_cfu_staged(
+    bank = apply_steps(
         bank,
-        {"raw": F.col("raw")},
-        [("raw", "0", "clean_0"), ("raw", "7", "clean_7"), ("raw", "14", "clean_14")],
+        C.clean_cfu_stages(
+            {"raw": F.col("raw")},
+            [("raw", "0", "clean_0"), ("raw", "7", "clean_7"), ("raw", "14", "clean_14")],
+        ),
     )
     keys = orders.select(
         F.col("o_orderkey").alias("key"),

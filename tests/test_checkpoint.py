@@ -52,6 +52,8 @@ def test_checkpoint_resume(spark, small_corpus, tmp_path):
     assert len(lineage) == 4
     assert all(row["status"] == "DONE" and row["snapshot_id"] == "snap1" for row in lineage)
     assert sum(row["n_docs"] for row in lineage) == len(docs)
+    # the per-batch plan build is part of the batch wall
+    assert all(0 <= row["plan_sec"] <= row["wall_sec"] for row in lineage)
 
     # the union of bucket outputs equals the oracle over all docs
     out = spark.read.parquet(str(tmp_path / "out"))
@@ -199,6 +201,7 @@ def test_corrections_upsert_keyed_replace(spark, small_corpus, tmp_path):
         assert (r.n_docs, r.n_spans) == (written.count(), n_spans)
         assert lineage[r.bucket]["n_docs"] == r.n_docs
         assert lineage[r.bucket]["n_spans"] == r.n_spans
+        assert 0 <= lineage[r.bucket]["plan_sec"] <= lineage[r.bucket]["wall_sec"]
 
     after = {r["doc_id"]: [s.asDict() for s in r["spans"]]
              for r in spark.read.parquet(out_path).collect()}

@@ -178,6 +178,17 @@ def test_ann_lsh_recall_vs_brute(spark):
     assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_q.values())
 
 
+def test_ann_brute_force_empty_query_side(spark):
+    """An empty query side is a defined empty result, not a crash in every
+    corpus task (a 0-row query matrix must stay 2-D for the kernel's
+    einsum)."""
+    rows = [(i, [float(i), 1.0, 0.5]) for i in range(20)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    brute = ann.brute_force_topk(emb, emb.where(F.lit(False)), k=5)
+    assert brute.columns == ["query_id", "corpus_id", "cosine", "rank"]
+    assert brute.collect() == []
+
+
 def test_embedding_cosine_pairs_block_bound(spark):
     """Block sizing is enforced: B derives from n/max_block_rows so packed
     rows stay bounded, an explicit undersized n_blocks raises loudly (not an

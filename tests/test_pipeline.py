@@ -24,7 +24,7 @@ def corpus():
 
 
 @pytest.fixture(scope="module")
-def engine_result(spark, corpus):
+def frames(spark, corpus):
     docs, media, _ = corpus
     docs_df = spark.createDataFrame(
         [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
@@ -34,17 +34,25 @@ def engine_result(spark, corpus):
     media_df = spark.createDataFrame(
         [(m["media_ref"], bytearray(m["content"])) for m in media], MEDIA_SCHEMA
     )
-    out = px.normalize_spans(docs_df, media_df).collect()
-    return {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in out}
+    return docs_df, media_df
 
 
-def test_span_sequence_equality(engine_result, corpus):
+def _by_doc(out) -> dict:
+    return {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in out.collect()}
+
+
+@pytest.fixture(scope="module")
+def engine_result(frames):
+    return _by_doc(px.normalize_spans(*frames))
+
+
+def _golden_mismatches(result: dict, corpus) -> list:
     docs, media, _ = corpus
     media_map = {m["media_ref"]: m["content"] for m in media}
     mismatches = []
     for d in docs:
         expected = ox.normalize_document(d["doc_id"], d["spans"], media_map)
-        got = engine_result.get(d["doc_id"], [])
+        got = result.get(d["doc_id"], [])
         if len(got) != len(expected):
             mismatches.append((d["doc_id"], "length", len(got), len(expected)))
             continue
@@ -53,7 +61,58 @@ def test_span_sequence_equality(engine_result, corpus):
                 if g[k] != e[k]:
                     mismatches.append((d["doc_id"], e["offset"], k, g[k], e[k]))
                     break
+    return mismatches
+
+
+def test_span_sequence_equality(engine_result, corpus):
+    mismatches = _golden_mismatches(engine_result, corpus)
     assert not mismatches, f"{len(mismatches)} span mismatches; first 3: {mismatches[:3]}"
+
+
+def test_repeat_build_reuses_expressions(spark, frames, corpus, monkeypatch):
+    """The plan's Column expressions are built once per JVM: a repeat
+    media-path build only wires DataFrames (~1.5k py4j commands; ~18k when
+    every build rebuilt the grid enrichment and cleaner banks), still
+    matches the goldens, and still reads the conf per build — the grid
+    repartition follows spark.sql.shuffle.partitions."""
+    import gc
+    import re
+
+    import py4j.java_gateway as jg
+
+    def build():
+        return px.normalize_spans(*frames, media_present=True, media_join="broadcast")
+
+    def grid_partitions(out) -> set[str]:
+        plan = out._jdf.queryExecution().sparkPlan().toString()
+        return set(re.findall(
+            r"hashpartitioning\(doc_id#\d+, offset#\d+, (\d+)\), REPARTITION_BY_NUM", plan
+        ))
+
+    build()  # a first build in this JVM fills the cache
+    gc.collect()  # finalizers of earlier garbage would also send commands
+    calls = {"n": 0}
+    send = jg.GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        calls["n"] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(jg.GatewayClient, "send_command", counted)
+    out = build()
+    monkeypatch.undo()
+    assert calls["n"] <= 3000, f"repeat build made {calls['n']} py4j commands"
+    mismatches = _golden_mismatches(_by_doc(out), corpus)
+    assert not mismatches, f"{len(mismatches)} span mismatches; first 3: {mismatches[:3]}"
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert grid_partitions(out) == {before}
+    try:
+        spark.conf.set(key, "5")
+        assert grid_partitions(build()) == {"5"}
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_all_docs_present(engine_result, corpus):
